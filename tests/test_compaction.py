@@ -145,3 +145,40 @@ def test_compacted_table_survives_catalog_loss(compacted_pair, spark):
     desc = spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect()
     txt = "\n".join(f"{r.col_name} {r.data_type}" for r in desc)
     assert "url_hash" in txt and "8" in txt.split("Num Buckets")[1][:6]
+
+
+def test_step_reads_no_compacted_delta(spark, corpus_dfs, monkeypatch):
+    """After a compaction, a step reads the compacted table plus the
+    deltas committed after it — never a ``seen_delta`` snapshot the
+    compacted table already holds, so the per-step read set stays
+    bounded however many waves ran before. Auto-compaction is off, so
+    the recorded step does not compact (compaction rebuilds from the
+    whole chain by design)."""
+    root = tempfile.mkdtemp(prefix="crawl_readset_")
+    cr = Crawl(
+        spark, root, corpus_dfs["pages"], corpus_dfs["robots_rules"],
+        corpus_dfs["politeness_budget"],
+        CrawlConfig(batch_size=100, max_seen_parts=0),
+    )
+    cr.init(corpus_dfs["seeds"])
+    tbl = None
+    try:
+        cr.step()
+        tbl = cr.compact(buckets=8)
+        cr.step()  # one delta after the compacted table
+        marker = cr._read_compaction()
+        reads = []
+        read = cr.store.read
+
+        def recording_read(spark_, table, snap=None):
+            reads.append((table, snap))
+            return read(spark_, table, snap)
+
+        monkeypatch.setattr(cr.store, "read", recording_read)
+        cr.step()
+        seen_snaps = [s for t, s in reads if t == "seen_delta"]
+        assert seen_snaps == [marker["snap"] + 1], reads
+    finally:
+        if tbl is not None:
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        shutil.rmtree(root, ignore_errors=True)

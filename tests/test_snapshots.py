@@ -1,4 +1,4 @@
-"""SnapshotStore semantics + crawl resume-equivalence (SURVEY.md §5.2.4)."""
+"""ParquetSnapshotStore semantics + crawl resume-equivalence (SURVEY.md §5.2.4)."""
 
 import json
 import os
@@ -133,39 +133,3 @@ def test_resume_equivalence(spark, corpus_dfs):
     shutil.rmtree(root_a)
     shutil.rmtree(root_b)
 
-
-def test_legacy_blobs_without_link_id_readable(spark, corpus_dfs):
-    """ADVICE r3: blob commits written before the link_id/delta format
-    were FULL tables without a link_id column; _blobs_upto must adopt
-    the newest such table as the chain seed instead of dying with an
-    AnalysisException inside merge_blob_links."""
-    root = tempfile.mkdtemp(prefix="legacyblob_")
-    try:
-        crawl = Crawl(
-            spark,
-            root,
-            corpus_dfs["pages"],
-            corpus_dfs["robots_rules"],
-            corpus_dfs["politeness_budget"],
-            CrawlConfig(collect_stats=True),
-        )
-        crawl.init(corpus_dfs["seeds"])
-        crawl.step()
-        # rewrite snap-1's blobs in the PRE-r3 format (full table, no
-        # link_id) — exactly what a store written by the r2 engine holds
-        blob_dir = os.path.join(root, "seen_blobs", "snap=1")
-        legacy = spark.read.parquet(blob_dir).drop("link_id")
-        tmp_out = blob_dir + ".legacy"
-        legacy.write.mode("overwrite").parquet(tmp_out)
-        shutil.rmtree(blob_dir)
-        os.replace(tmp_out, blob_dir)
-        assert "link_id" not in spark.read.parquet(blob_dir).columns
-        # the merged view reconstructs a link_id and the next wave runs
-        merged = crawl._blobs_upto(1)
-        assert "link_id" in merged.columns
-        assert merged.count() > 0
-        stats = crawl.step()
-        assert stats["wave"] == 1
-        assert stats["fetched"] > 0
-    finally:
-        shutil.rmtree(root, ignore_errors=True)

@@ -5,28 +5,37 @@ import collections
 import pytest
 from pyspark.sql import functions as F
 
+from tweetf0rm_spark.operators.seenset import build_seen_blobs
 from tweetf0rm_spark.wave import empty_seen, init_frontier, run_wave
+
+
+def _wave(spark, corpus_dfs, frontier, seen, w, **kw):
+    return run_wave(
+        spark, frontier, seen,
+        corpus_dfs["pages"], corpus_dfs["robots_rules"],
+        corpus_dfs["politeness_budget"], wave=w, batch_size=150, **kw,
+    )
 
 
 @pytest.fixture(scope="module")
 def two_waves(spark, corpus_dfs):
+    """Two chained waves; the seen set after each is the union of the
+    waves' ``seen_delta`` outputs, which each result also keeps."""
     frontier = init_frontier(spark, corpus_dfs["seeds"])
     seen = empty_seen(spark)
     results = []
     for w in range(2):
-        r = run_wave(
-            spark, frontier, seen,
-            corpus_dfs["pages"], corpus_dfs["robots_rules"],
-            corpus_dfs["politeness_budget"], wave=w, batch_size=150,
-        )
+        r = _wave(spark, corpus_dfs, frontier, seen, w)
+        delta = r.seen_delta.localCheckpoint()
         results.append(
             {
                 "batch": r.fetch_batch.orderBy("fetch_order").collect(),
                 "fetched": r.fetched.collect(),
+                "seen_delta": delta,
             }
         )
         frontier = r.frontier_next.localCheckpoint()
-        seen = r.seen_next.localCheckpoint()
+        seen = seen.unionByName(delta)
     return results, frontier, seen
 
 
@@ -151,3 +160,36 @@ def test_fetch_at_schedule(two_waves, corpus_dfs):
             saw_nonzero = saw_nonzero or want_delay > 0
         prev_at.clear()
     assert saw_nonzero, "corpus exercised no nonzero crawl_delay"
+
+
+def test_seen_parts_equal_their_union(spark, two_waves, corpus_dfs):
+    """``seen`` given as disjoint parts [a, b] schedules exactly like
+    ``seen=a ∪ b``, with the bloom pre-check in front of the exact
+    anti-join as in a crawl. The wave-2 frontier also carries the
+    already-seen seeds, so the exact confirm, the BFS admission dedupe
+    and the lineage's deduped count all probe the seen parts."""
+    results, frontier, _ = two_waves
+    a, b = results[0]["seen_delta"], results[1]["seen_delta"]
+    blobs = build_seen_blobs(a.unionByName(b))
+    seeds = init_frontier(spark, corpus_dfs["seeds"])
+    frontier = frontier.unionByName(seeds.withColumn("wave", F.lit(2)))
+
+    def by_hash(df):
+        return sorted(df.collect(), key=lambda x: x.url_hash)
+
+    def wave2(seen):
+        r = _wave(spark, corpus_dfs, frontier, seen, 2,
+                  seen_blobs=blobs, persist=True)
+        out = {
+            "batch": r.fetch_batch.orderBy("fetch_order").collect(),
+            "frontier_next": by_hash(r.frontier_next),
+            "seen_delta": by_hash(r.seen_delta),
+            "deduped": r.lineage.agg(F.sum("deduped")).first()[0],
+        }
+        r.unpersist()
+        return out
+
+    as_parts = wave2([a, b])
+    assert as_parts == wave2(a.unionByName(b))
+    assert as_parts["batch"] and as_parts["frontier_next"]
+    assert as_parts["deduped"] == seeds.count()

@@ -26,7 +26,8 @@ job repeated back-to-back ranged 2.1s–27.5s; local[32] legs were
 consistently slower than local[8] legs run minutes apart). Defaults
 therefore: pair = local[4] vs local[16] (still N vs 4N), levels
 interleaved across rounds — each round boots a fresh JVM per level
-(no warm-pool bleed) and times 2 reps after a warm-up — and the final
+(no warm-pool bleed) and, by default, times 2 reps after one warm-up
+execution — and the final
 figure per level is the min across all rounds (the steal-free
 estimate; both levels sample the same noise distribution over the
 same wall-clock horizon). Shuffle goes to tmpfs so the comparison
@@ -35,6 +36,16 @@ measures compute + memory bandwidth, not one shared disk.
 Usage:
     python tools/scaling_run.py [n_rows] [rounds]
     SPARK_GRAFT_SCALE_PAIR=8,32 python tools/scaling_run.py
+
+Environment:
+    SPARK_GRAFT_SCALE_PAIR    core counts N,4N compared (default 4,16)
+    SPARK_GRAFT_SCALE_REPS    timed executions per level per round,
+                              >= 1 (default 2)
+    SPARK_GRAFT_SCALE_WARMUP  untimed warm-up executions before them,
+                              >= 0 (default 1). With 0, the first timed
+                              rep also pays JVM/JIT/codegen warm-up, so
+                              keep REPS >= 2 unless a rep runs for many
+                              minutes (10^8-row scale).
 
 Prints one JSON line per round plus a final summary; appends the
 result row to BENCH.md.
@@ -135,6 +146,11 @@ def main() -> None:
     # the steal-free estimator. Defaults preserve the original protocol.
     reps = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "2"))
     warmup = int(os.environ.get("SPARK_GRAFT_SCALE_WARMUP", "1"))
+    if reps < 1 or warmup < 0:
+        sys.exit(
+            f"scaling_run: need SPARK_GRAFT_SCALE_REPS >= 1 and "
+            f"SPARK_GRAFT_SCALE_WARMUP >= 0 (got {reps} and {warmup})"
+        )
     times: dict[int, list[float]] = {lo_c: [], hi_c: []}
     for r in range(rounds):
         for cores in pair:

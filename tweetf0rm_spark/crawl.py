@@ -1,4 +1,4 @@
-"""Crawl driver: init → wave⁺ → resume over a SnapshotStore
+"""Crawl driver: init → wave⁺ → resume over a ParquetSnapshotStore
 (SURVEY.md §3.2 entry points; the engine's ``bootstrap.py``).
 
 Reference lifecycle being replaced (``[U] bootstrap.py`` →
@@ -21,6 +21,7 @@ wave (and snapshot reads give AQE accurate sizes).
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,7 +32,7 @@ from .operators.seenset import (
     DEFAULT_P, build_seen_blobs, merge_blob_links, pid_col,
     update_seen_blobs,
 )
-from .sources.snapshots import ParquetSnapshotStore, SnapshotStore
+from .sources.snapshots import ParquetSnapshotStore
 from .wave import empty_seen, init_frontier, run_wave
 
 FETCH_LOG_COLS = [
@@ -46,7 +47,6 @@ class CrawlConfig:
     n_salts: int = N_SALTS
     default_budget: int = DEFAULT_BUDGET
     p: int = DEFAULT_P          # seen-set hash partitions (fixed at init)
-    use_filters: bool = True    # bloom pre-check in front of anti-join
     collect_stats: bool = True  # per-wave count() jobs (cheap; off at scale)
     max_retries: int = 2        # re-attempts per failed fetch (§2.A A12)
     #: auto-compaction cadence: when the seen-set delta chain exceeds
@@ -94,7 +94,7 @@ class Crawl:
     def __init__(
         self,
         spark: SparkSession,
-        store: SnapshotStore | str,
+        store: ParquetSnapshotStore | str,
         pages: DataFrame,
         robots_rules: DataFrame,
         politeness_budget: DataFrame | None = None,
@@ -136,20 +136,17 @@ class Crawl:
         return 0
 
     # ---------------------------------------------------------- seen set
-    def _compaction_marker_path(self) -> str | None:
-        root = getattr(self.store, "root", None)
-        if root is None:
-            return None
+    def _compaction_marker_path(self) -> str:
         import os
 
-        return os.path.join(root, "_compaction.json")
+        return os.path.join(self.store.root, "_compaction.json")
 
     def _read_compaction(self) -> dict | None:
         import json
         import os
 
         p = self._compaction_marker_path()
-        if p is None or not os.path.exists(p):
+        if not os.path.exists(p):
             return None
         with open(p) as f:
             return json.load(f)
@@ -173,11 +170,6 @@ class Crawl:
         import uuid
 
         mp = self._compaction_marker_path()
-        if mp is None:
-            raise NotImplementedError(
-                "compact() needs a filesystem-rooted SnapshotStore "
-                "(store has no .root to place the bucketed table in)"
-            )
         snap = self.store.current()
         seen = self._seen_upto(snap)
         prev = self._read_compaction()
@@ -210,16 +202,14 @@ class Crawl:
 
             self.spark.sql(f"DROP TABLE IF EXISTS {prev['table']}")
             shutil.rmtree(prev["path"], ignore_errors=True)
-            if prev.get("blob_path"):
-                shutil.rmtree(prev["blob_path"], ignore_errors=True)
+            shutil.rmtree(prev["blob_path"], ignore_errors=True)
         return tbl
 
     def _ensure_compacted_table(self, marker: dict) -> DataFrame | None:
         """Catalog entries don't survive a session restart (no
         metastore in this sandbox); re-register the external bucketed
         table from the marker so the bucket metadata — the whole point
-        — is back in the planner. Production path: Iceberg/HMS makes
-        this durable without the DDL replay."""
+        — is back in the planner."""
         import os
 
         if not os.path.isdir(marker["path"]):
@@ -232,7 +222,38 @@ class Crawl:
                 f"INTO {marker['buckets']} BUCKETS "
                 f"LOCATION '{marker['path']}'"
             )
-        return self.spark.table(marker["table"])
+        return self.spark.table(marker["table"]).select("url", "url_hash")
+
+    def _compacted_blobs(self, marker: dict) -> DataFrame | None:
+        import os
+
+        if not os.path.isdir(marker["blob_path"]):
+            return None
+        return self.spark.read.parquet(marker["blob_path"])
+
+    def _base_and_deltas(
+        self, snap: int, table: str,
+        base: Callable[[dict], DataFrame | None],
+    ) -> list[DataFrame]:
+        """``table`` at ``snap`` as physical parts: the compacted base
+        ``base(marker)`` when a compaction at or before ``snap`` left
+        one, then the per-wave commits after it. A base whose files are
+        gone yields None, and the whole chain since snapshot 0 is read
+        instead (compaction rebuilds from that chain, so it is the
+        source of truth)."""
+        marker = self._read_compaction()
+        parts: list[DataFrame] = []
+        start = 0
+        if marker is not None and marker["snap"] <= snap:
+            b = base(marker)
+            if b is not None:
+                parts.append(b)
+                start = marker["snap"] + 1
+        parts.extend(
+            self.store.read(self.spark, table, s)
+            for s in range(start, snap + 1)
+        )
+        return parts
 
     def _seen_parts(self, snap: int) -> list[DataFrame]:
         """Seen set as physical parts: [compacted bucketed table?] +
@@ -241,19 +262,9 @@ class Crawl:
         equivalent to one join against the union (NOT IN A∪B ≡
         NOT IN A AND NOT IN B) but keep the compacted part's bucket
         layout usable by the planner."""
-        marker = self._read_compaction()
-        parts: list[DataFrame] = []
-        start = 0
-        if marker is not None and marker["snap"] <= snap:
-            tbl = self._ensure_compacted_table(marker)
-            if tbl is not None:
-                parts.append(tbl.select("url", "url_hash"))
-                start = marker["snap"] + 1
-        parts.extend(
-            self.store.read(self.spark, "seen_delta", s)
-            for s in range(start, snap + 1)
+        return self._base_and_deltas(
+            snap, "seen_delta", self._ensure_compacted_table
         )
-        return parts
 
     def _blobs_upto(self, snap: int) -> DataFrame:
         """Current filter-blob table at ``snap``: merge of the per-wave
@@ -262,52 +273,9 @@ class Crawl:
         written per wave are ∝ delta this way — the old full-table
         commit rewrote every chain link every wave (~GBs at 10^10
         keys for an O(delta) logical change)."""
-        marker = self._read_compaction()
-        parts: list[DataFrame] = []
-        start = 0
-        if (
-            marker is not None
-            and marker["snap"] <= snap
-            and marker.get("blob_path")
-        ):
-            import os
-
-            if os.path.isdir(marker["blob_path"]):
-                parts.append(self.spark.read.parquet(marker["blob_path"]))
-                start = marker["snap"] + 1
-        raw = [
-            self.store.read(self.spark, "seen_blobs", s)
-            for s in range(start, snap + 1)
-        ]
-        # pre-delta stores (ADVICE r3): blobs committed before the
-        # link_id/delta format were FULL tables per wave, so the newest
-        # link_id-less part alone carries the state at its snapshot —
-        # adopt it as the chain seed (link_id by in-chain position) and
-        # drop older full tables; delta-format parts after the format
-        # change layer on top as usual.
-        legacy = [d for d in raw if "link_id" not in d.columns]
-        raw = [d for d in raw if "link_id" in d.columns]
-        if legacy:
-            from pyspark.sql import Window
-
-            # chain position ≈ age: (wave, n_keys) ascending. Ties are
-            # possible in principle (two links written at one wave);
-            # row_number over a tied order is nondeterministic ACROSS
-            # READS, which would let link_id assignments flip between
-            # step() calls and send "newest link" updates to a stale
-            # blob (ADVICE r4). The xxhash64 of the filter bytes is a
-            # pure function of the row, so the assignment is stable on
-            # every re-read regardless of partition layout.
-            w = Window.partitionBy("partition_id", "kind").orderBy(
-                "wave", "n_keys", F.xxhash64(F.col("filter"))
-            )
-            parts.append(
-                legacy[-1].withColumn(
-                    "link_id", (F.row_number().over(w) - 1).cast("int")
-                )
-            )
-        parts.extend(raw)
-        return merge_blob_links(parts)
+        return merge_blob_links(
+            self._base_and_deltas(snap, "seen_blobs", self._compacted_blobs)
+        )
 
     def _seen_upto(self, snap: int) -> DataFrame:
         """Full seen set = union of the append-only per-wave deltas
@@ -331,28 +299,22 @@ class Crawl:
             raise RuntimeError("crawl not initialized — call init(seeds)")
         wave = snap
         frontier = self.store.read(self.spark, "frontier", snap)
-        seen = self._seen_upto(snap)
         blobs = self._blobs_upto(snap)
         # A11 analogue: health downweight from the last K waves' stats
-        # (stores written before the health table just skip — the
-        # signal rebuilds over the next K waves).
         health = None
         if self.cfg.use_health and snap >= 1:
             from .operators.health import host_health
 
-            parts = []
             lo = max(1, snap - self.cfg.health_waves + 1)
-            for s in range(lo, snap + 1):
-                try:
-                    parts.append(self.store.read(self.spark, "health", s))
-                except FileNotFoundError:
-                    pass
-            if parts:
-                health = host_health(parts, floor=self.cfg.health_floor)
+            health = host_health(
+                [self.store.read(self.spark, "health", s)
+                 for s in range(lo, snap + 1)],
+                floor=self.cfg.health_floor,
+            )
         r = run_wave(
             self.spark,
             frontier,
-            seen,
+            self._seen_parts(snap),
             self.pages,
             self.robots,
             self.budget,
@@ -360,10 +322,9 @@ class Crawl:
             batch_size=self.cfg.batch_size,
             n_salts=self.cfg.n_salts,
             default_budget=self.cfg.default_budget,
-            seen_blobs=blobs if self.cfg.use_filters else None,
+            seen_blobs=blobs,
             p=self.cfg.p,
             persist=True,
-            seen_parts=self._seen_parts(snap),
             psl=self.psl,
             host_health=health,
         )
@@ -380,10 +341,7 @@ class Crawl:
         # failed-attempt count carried from the previous ledger. A url
         # that succeeded (or was exhausted last wave and so never
         # re-attempted) is absent from r.failed and drops off.
-        try:
-            prev_failed = self.store.read(self.spark, "failed", snap)
-        except FileNotFoundError:  # store predates the retry ledger
-            prev_failed = self.spark.createDataFrame([], FAILED_DDL)
+        prev_failed = self.store.read(self.spark, "failed", snap)
         new_failed = (
             r.failed.join(
                 prev_failed.select(
@@ -455,7 +413,6 @@ class Crawl:
         compacted = False
         if (
             self.cfg.max_seen_parts
-            and self._compaction_marker_path() is not None
             and len(self._seen_parts(snap + 1)) > self.cfg.max_seen_parts
         ):
             self.compact(buckets=self.cfg.compact_buckets)

@@ -12,9 +12,10 @@ Scale notes (10^10-URL frontier):
   the previous wave's build, so only the candidate side moves;
 - below ``autoBroadcastJoinThreshold`` (or when ``hint='broadcast'``)
   the join is broadcast and shuffle-free;
-- the bloom pre-check (probe_bloom, filters/bloom.py) runs map-side and
-  removes the bulk of already-seen candidates *before* the shuffle —
-  the anti-join then only confirms the bloom's false positives.
+- the bloom pre-check (``seenset.probe_seen_blobs``) is a cogroup that
+  shuffles the candidates on ``partition_id`` to meet their partition's
+  blob; bloom misses are novel outright, so only the bloom hits (seen
+  urls plus false positives) reach the exact anti-join here.
 """
 
 from __future__ import annotations
@@ -59,14 +60,6 @@ def anti_join_seen_parts(
     for p in parts:
         out = anti_join_seen(out, p, key=key)
     return out
-
-
-def already_seen(
-    candidates: DataFrame, seen: DataFrame, key: str = "url_hash"
-) -> DataFrame:
-    """Diagnostics: the candidates that WERE seen (left semi — also
-    multiplicity-independent, same no-distinct argument as above)."""
-    return candidates.join(seen.select(key), on=key, how="left_semi")
 
 
 def dedupe_within(df: DataFrame, key: str = "url_hash",

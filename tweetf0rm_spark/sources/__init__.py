@@ -1,1 +1,1 @@
-"""Sources & sinks: snapshot store (Iceberg-or-emulated), seed lists."""
+"""Sources & sinks: the parquet snapshot store (snapshots.py)."""

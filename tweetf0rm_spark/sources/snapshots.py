@@ -1,19 +1,14 @@
-"""SnapshotStore — atomic versioned table snapshots with time-travel
+"""Snapshot store — atomic versioned table snapshots with time-travel
 (SURVEY.md §1.2; BASELINE.json:L6 "resumes exactly from Iceberg
 checkpoint snapshots").
 
-The north rule says Iceberg; this sandbox has no Iceberg runtime jar
-(verified: /opt/spark/jars has none, no network), so the store is an
-interface with two backends:
-
-- :class:`ParquetSnapshotStore` (default, self-contained): versioned
-  parquet directories ``<root>/<table>/snap=<n>/`` plus a JSON manifest
-  swapped atomically (write-tmp → ``os.replace``). Gives the exact
-  semantics the engine relies on — atomic commit, time-travel by
-  snapshot id, resume-from-latest-complete — with zero dependencies.
-- :class:`IcebergSnapshotStore`: thin adapter over a real catalog
-  (``writeTo(...).createOrReplace`` / ``VERSION AS OF``) used when
-  ``spark.sql.catalog.*`` is configured; raises cleanly here.
+:class:`ParquetSnapshotStore` is the engine's one store: versioned
+parquet directories ``<root>/<table>/snap=<n>/`` plus a JSON manifest
+swapped atomically (write-tmp → ``os.replace``). It gives the semantics
+the engine relies on — atomic commit, time-travel by snapshot id,
+resume-from-latest-complete — with no dependency beyond Spark and a
+filesystem. Everything else the crawl keeps on disk (the compacted
+seen-set table and its marker, crawl.py) lives under the same ``root``.
 
 Crash safety: data dirs are written first (tmp + rename), the manifest
 pointer last. A wave killed anywhere leaves ``current`` at the previous
@@ -37,26 +32,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 
-class SnapshotStore:
-    """Interface: commit a set of tables as snapshot n, read any
-    snapshot back, discover the latest complete one."""
+class ParquetSnapshotStore:
+    """Commit a set of tables as snapshot n, read any snapshot back,
+    discover the latest complete one."""
 
-    def current(self) -> int:
-        raise NotImplementedError
-
-    def commit(self, snap: int, tables: dict[str, DataFrame],
-               meta: dict | None = None) -> None:
-        raise NotImplementedError
-
-    def read(self, spark: SparkSession, table: str,
-             snap: int | None = None) -> DataFrame:
-        raise NotImplementedError
-
-    def meta(self, snap: int | None = None) -> dict:
-        raise NotImplementedError
-
-
-class ParquetSnapshotStore(SnapshotStore):
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
@@ -120,21 +99,3 @@ class ParquetSnapshotStore(SnapshotStore):
             raise FileNotFoundError(f"{table}@snap={snap} not committed")
         return spark.read.parquet(path)
 
-
-class IcebergSnapshotStore(SnapshotStore):
-    """Adapter for a real Iceberg catalog (``iceberg-spark-runtime`` on
-    the classpath + ``spark.sql.catalog.<name>`` configured). Maps
-    commit → ``writeTo(table).createOrReplace()`` (one Iceberg snapshot
-    per wave) and time-travel → ``VERSION AS OF``. Not constructible in
-    this sandbox (no jar, no network) — kept as the documented
-    production path."""
-
-    def __init__(self, spark: SparkSession, catalog: str, namespace: str):
-        jars = spark.conf.get("spark.jars", "") + spark.conf.get(
-            "spark.sql.extensions", ""
-        )
-        if "iceberg" not in jars.lower():
-            raise RuntimeError(
-                "Iceberg runtime not on the classpath; use ParquetSnapshotStore"
-            )
-        self.spark, self.catalog, self.ns = spark, catalog, namespace

@@ -56,7 +56,6 @@ class WaveResult:
     fetch_batch: DataFrame      # scheduled urls in fetch order (no html)
     fetched: DataFrame          # fetch+extract output (with text/outlinks)
     frontier_next: DataFrame    # QUEUED rows for wave+1 (deferred ∪ new)
-    seen_next: DataFrame        # (url, url_hash) after this wave
     seen_delta: DataFrame       # ONLY this wave's additions (append log)
     lineage: DataFrame          # per (wave, registered_domain) counters
     failed: DataFrame | None = None  # fetch failures (null html) this wave
@@ -153,7 +152,7 @@ def _fetch_extract(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def run_wave(
     spark: SparkSession,
     frontier: DataFrame,
-    seen: DataFrame,
+    seen: DataFrame | list[DataFrame],
     pages: DataFrame,
     robots_rules: DataFrame,
     politeness_budget: DataFrame | None = None,
@@ -164,18 +163,18 @@ def run_wave(
     seen_blobs: DataFrame | None = None,
     p: int = DEFAULT_P,
     persist: bool = False,
-    seen_parts: list[DataFrame] | None = None,
     psl: DataFrame | None = None,
     host_health: DataFrame | None = None,
 ) -> WaveResult:
     """Run one scheduling+fetch wave. All outputs are lazy DataFrames.
 
-    ``seen_parts``, when given, is the seen-set as physical parts
-    (compacted bucketed table + post-compaction deltas — Crawl.compact)
-    covering the same keys as ``seen``; the dedupe joins then chain per
-    part so the big compacted part never re-shuffles (its bucket layout
-    co-locates the join). ``seen`` remains the logical union for
-    ``seen_next``."""
+    ``seen`` is the seen set ``(url, url_hash)``, either one frame or
+    its disjoint physical parts (compacted bucketed table + later
+    deltas — Crawl.compact). The dedupe joins chain per part, so the
+    big compacted part never re-shuffles (its bucket layout co-locates
+    the join). The seen set after this wave is ``seen`` plus
+    ``seen_delta``."""
+    seen = seen if isinstance(seen, list) else [seen]
     cand = canonicalized(frontier.filter(F.col("state") == "QUEUED"), psl=psl)
     cand = dedupe_within(cand.select(*FRONTIER_COLS))
     if persist:
@@ -187,7 +186,7 @@ def run_wave(
     # 1. dedupe vs seen-set: bloom pre-check (when blobs supplied) in
     #    front of the exact anti-join — result identical either way
     novel = dedupe_against_seen(
-        cand, seen_parts or seen, blobs=seen_blobs, p=p, exact=True
+        cand, seen, blobs=seen_blobs, p=p, exact=True
     )
 
     # 1b. retries (§2.A A12): RETRY rows are prior fetch failures
@@ -330,12 +329,10 @@ def run_wave(
     # 7. next state: seen' = seen ∪ scheduled; frontier' = deferred ∪ new.
     #    No distinct() needed: scheduled rows survived the anti-join
     #    (disjoint from seen) and dedupe_within (unique by url_hash), so
-    #    the union is already a set — the full-corpus re-shuffle the old
-    #    `.distinct()` paid every wave is gone. seen_delta is the
-    #    append-only increment the snapshot store persists per wave.
+    #    seen_delta — the append-only increment the snapshot store
+    #    persists per wave — is disjoint from every seen part.
     #    retries are already seen — only first attempts extend the set
     scheduled_urls = batch.filter(~F.col("_is_retry")).select("url", "url_hash")
-    seen_next = seen.select("url", "url_hash").unionByName(scheduled_urls)
 
     carry = deferred.withColumn(
         "state",
@@ -345,7 +342,7 @@ def run_wave(
     # NOT IN (A∪B) == NOT IN A AND NOT IN B) so the compacted part's
     # bucket layout is preserved here too
     new_novel = anti_join_seen_parts(
-        new_cand, (seen_parts or [seen]) + [scheduled_urls, carry]
+        new_cand, seen + [scheduled_urls, carry]
     )
     frontier_next = carry.unionByName(new_novel)
     frontier_next = dedupe_within(frontier_next)
@@ -361,7 +358,7 @@ def run_wave(
     # With a compacted bucketed part, this semi-join is also
     # exchange-free on the seen side.
     _dedup_hits = None
-    for _part in seen_parts or [seen]:
+    for _part in seen:
         _h = cand.join(_part.select("url_hash"), "url_hash", "left_semi")
         _dedup_hits = _h if _dedup_hits is None else _dedup_hits.unionByName(_h)
 
@@ -390,7 +387,6 @@ def run_wave(
         fetch_batch=fetch_batch,
         fetched=fetched,
         frontier_next=frontier_next,
-        seen_next=seen_next,
         seen_delta=scheduled_urls,
         lineage=lineage,
         failed=failed,
